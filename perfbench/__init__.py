@@ -1,0 +1,2 @@
+"""Crawl-and-analytics benchmark: ``python3 perfbench/run.py --workload
+<name> --seed <n> --seconds <s> --trace <0|1>`` (see README.md)."""
