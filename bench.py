@@ -46,11 +46,10 @@ inflated local[1] min must be re-validated just like a starved
 local[4] one). Min-per-level is a capacity estimator either way:
 extra samples can only sharpen it.
 
-Internal mode: ``python bench.py --crawl-only <cpus> [runs] [bloom]``
+Internal mode: ``python bench.py --crawl-only <cpus> [runs]``
 runs just the crawl at local[cpus] and prints a small JSON (used by
 the subprocess fan-out; separate processes because one JVM has one
-master). The optional ``bloom`` token turns on the partitioned Bloom
-seen-set prefilter for A/B measurement (BENCH.md records the result).
+master).
 """
 
 from __future__ import annotations
@@ -117,7 +116,7 @@ def _idlest_cores(n: int) -> set[int]:
     return set(ranked[:n])
 
 
-def run_crawl(cpus: int, runs: int = 2, use_bloom: bool = False) -> dict:
+def run_crawl(cpus: int, runs: int = 2) -> dict:
     """Warm-up crawl on the WARM micro corpus (caches codegen/
     plan-compile fixed costs in ~1/4 of a SMOKE warmup's wall — at a
     real 10^10-URL frontier the one-time compile is noise),
@@ -174,7 +173,7 @@ def run_crawl(cpus: int, runs: int = 2, use_bloom: bool = False) -> dict:
         with tempfile.TemporaryDirectory() as wh:
             c0 = cgroup_cpu_s()
             t0 = time.time()
-            eng = CrawlEngine(spark, wh, run_paths, use_bloom=use_bloom)
+            eng = CrawlEngine(spark, wh, run_paths)
             eng.run()
             n_urls = eng.result_crawl_order().count()
             n_seen = eng.result_seen().count()
@@ -198,7 +197,6 @@ def run_crawl(cpus: int, runs: int = 2, use_bloom: bool = False) -> dict:
     wall = min(walls)
     return {
         "cpus": cpus,
-        "use_bloom": use_bloom,
         "urls_fetched": n_urls,
         "seen_set": n_seen,
         "warmup_wall_sec": round(warm_wall, 2),
@@ -327,8 +325,7 @@ def cleanest_pair_efficiency(per_level: dict) -> tuple[float, list[float], bool]
 def main():
     if len(sys.argv) > 1 and sys.argv[1] == "--crawl-only":
         runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-        bloom = len(sys.argv) > 4 and sys.argv[4] == "bloom"
-        print(json.dumps(run_crawl(int(sys.argv[2]), runs=runs, use_bloom=bloom)))
+        print(json.dumps(run_crawl(int(sys.argv[2]), runs=runs)))
         return
 
     t0 = time.time()

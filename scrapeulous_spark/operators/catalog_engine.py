@@ -314,7 +314,7 @@ def fn_url_canonicalize(spark, sf):
     in the seen-set. (The engine's in-crawl normalizer does the
     fragment strip the reference does — social.js:121-123; this is the
     fuller normalizer a production frontier runs before hashing into
-    the Bloom/seen path.) Deterministic decorated inputs are built from
+    the seen-set anti-join.) Deterministic decorated inputs are built from
     the page URLs so the param logic is actually exercised — the
     corpus' own links carry no query strings. Narrow projection, no
     shuffle."""
@@ -952,8 +952,8 @@ def diff_crawl_snapshots(spark, sf):
     """Recrawl delta: classify every URL across two crawl snapshots as
     added / removed / changed (content hash differs) — the
     CommonCrawl-style diff report and the input to recrawl scheduling
-    (changed pages recrawl sooner; removed ones tombstone via the
-    cuckoo sidecar). The second snapshot is synthesized
+    (changed pages recrawl sooner; removed ones are tombstoned by
+    CrawlEngine.forget()). The second snapshot is synthesized
     deterministically from the corpus (url-hash buckets drop ~1/13,
     mutate ~1/7, add ~1/17) so both engines diff identical inputs.
 

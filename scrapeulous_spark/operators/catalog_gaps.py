@@ -644,14 +644,12 @@ def retry_fallback_selector(spark, sf):
                          WHERE url NOT IN (SELECT url FROM del))""",
 )
 def seen_recrawl_membership(spark, sf):
-    """Deletion-aware URL-seen membership (north_star's cuckoo-filter
-    sidecar): new = candidates \\ (seen \\ deleted). The engine path
-    routes through BOTH pruning filters — bloom over seen, per-shard
-    cuckoo over the tombstones — with the exact joins confirming, so
-    the oracle match proves the filters never change the result.
+    """Deletion-aware URL-seen membership: new = candidates \\
+    (seen \\ deleted), the engine's exact seen-set path
+    (operators/seen.py::new_urls_exact) — two left_anti joins.
     Engine integration: CrawlEngine.forget() / _update_seen
     (plans/loop.py); unit invariants in tests/test_recrawl.py."""
-    from .seen import bloom_build, cuckoo_build, new_urls_exact
+    from .seen import new_urls_exact
 
     u = T(spark, sf, "orders").select(
         F.concat(
@@ -665,12 +663,7 @@ def seen_recrawl_membership(spark, sf):
     seen = u.filter("o_orderkey % 3 != 0").select("url").distinct()
     deleted = u.filter("o_orderkey % 3 != 0 and o_orderkey % 7 = 0").select("url").distinct()
     cand = u.filter("o_orderkey % 2 = 0").select("url").distinct()
-    params = dict(n_buckets=16, n_bits=1 << 16, k=4)
-    bloom = bloom_build(seen, **params)
-    cuckoo = cuckoo_build(deleted, n_buckets=16)
-    return new_urls_exact(
-        cand, seen, bloom=bloom, deleted=deleted, cuckoo=cuckoo, cuckoo_shards=16, **params
-    )
+    return new_urls_exact(cand, seen, deleted)
 
 
 def _proxy_wave_oracle():

@@ -22,7 +22,7 @@ Scale notes (100 TB / 10^10-frontier design):
     the host_bucket used for storage partitioning (salting.py, wired
     into the frontier commits by loop.py::_write_frontier)
   * dedup is a per-seed groupBy (map-side partial agg) and the global
-    seen-set update is a left_anti join, Bloom-prefiltered in seen.py
+    seen-set update is an exact left_anti join (seen.py)
 """
 
 from __future__ import annotations

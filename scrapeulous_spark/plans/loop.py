@@ -31,6 +31,7 @@ from ..functions import urls as U
 from ..operators.extract import dedup_entities, extract_entities_raw, seed_page_titles
 from ..operators.fetch import fetch_join, payload_join, validate_payloads
 from ..operators.frontier import expand_candidates, schedule_pops
+from ..operators.seen import new_urls_exact
 from ..sources.tables import Warehouse
 
 CRAWL_ORDER = T.StructType(
@@ -91,20 +92,8 @@ PAYLOAD_REPORT = T.StructType(
         T.StructField("caption_match", T.BooleanType()),
     ]
 )
-BLOOM = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("bits", T.BinaryType()),
-    ]
-)
-# tombstone sidecar: deleted urls (recrawl/expiry) + per-shard cuckoo filters
+# tombstones: seen urls forgotten for recrawl/expiry
 DELETED = T.StructType([T.StructField("url", T.StringType())])
-CUCKOO = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("filter", T.BinaryType()),
-    ]
-)
 METRICS = T.StructType(
     [
         T.StructField("superstep", T.IntegerType()),
@@ -128,13 +117,8 @@ class CrawlEngine:
         corpus_paths: dict[str, str],
         link_depth: int = 1,
         validate_images: bool = True,
-        use_bloom: bool = False,
-        bloom_buckets: int = 64,
-        bloom_bits: int = 1 << 20,
-        bloom_k: int = 4,
         frontier_buckets: int = 32,
         salt_hot_hosts: bool = True,
-        cuckoo_shards: int = 64,
         broadcast_sched_keys: bool = True,
     ):
         self.spark = spark
@@ -142,11 +126,8 @@ class CrawlEngine:
         self.paths = corpus_paths
         self.link_depth = link_depth
         self.validate_images = validate_images
-        self.use_bloom = use_bloom
         self.frontier_buckets = frontier_buckets
         self.salt_hot_hosts = salt_hot_hosts
-        self.bloom_params = {"n_buckets": bloom_buckets, "n_bits": bloom_bits, "k": bloom_k}
-        self.cuckoo_shards = cuckoo_shards
         # broadcast the scheduled-keys side of the payload joins so the
         # body column streams from the scan with no exchange. Right
         # whenever one superstep's scheduled batch fits a broadcast
@@ -154,9 +135,7 @@ class CrawlEngine:
         # shuffle join — the flag exists because at a true 10^10
         # frontier a single round CAN exceed broadcast limits.
         self.broadcast_sched_keys = broadcast_sched_keys
-        self.bloom = self.wh.table("bloom", BLOOM)
         self.deleted = self.wh.table("deleted", DELETED)
-        self.cuckoo = self.wh.table("cuckoo", CUCKOO)
         self.crawl_order = self.wh.table("crawl_order", CRAWL_ORDER)
         self.seen = self.wh.table("seen", SEEN)
         self.entities = self.wh.table("entities", ENTITIES)
@@ -258,91 +237,41 @@ class CrawlEngine:
     def _has_tombstones(self) -> bool:
         """Driver-side manifest peek — NO Spark job. The default crawl
         (no forget() calls) must not pay any per-superstep cost for the
-        deletion sidecar's existence."""
+        tombstone table's existence."""
         cur = self.deleted.current()
         return bool(cur and cur["dirs"])
 
     def _update_seen(self, urls: DataFrame, superstep: int):
-        """Exact seen-set MERGE over the EFFECTIVE seen set
-        (seen minus deleted tombstones). With use_bloom, the partitioned
-        Bloom filter (seen.py) prunes the anti-join probe side — only
-        maybe-seen rows pay the join; the filter is maintained
-        incrementally by OR-merging a delta built from just the
-        newly-admitted urls. With tombstones (forget()/recrawl), the
-        cuckoo sidecar routes around the bloom's staleness (blooms
-        cannot delete) — only maybe-deleted rows pay the tombstone
-        join, and re-admitted urls are resurrected by DROPPING their
-        tombstone, never by re-appending to the big seen table.
-        Exactness NEVER depends on either filter: false positives are
-        rescued by the confirming joins (tests/test_seen_bloom.py,
-        tests/test_recrawl.py)."""
-        cand = urls.select("url").distinct()
+        """Exact seen-set MERGE over the EFFECTIVE seen set (seen minus
+        deleted tombstones; operators/seen.py). Re-admitted urls are
+        resurrected by DROPPING their tombstone, never by re-appending
+        to the big append-only seen table (tests/test_recrawl.py)."""
         seen = self.seen.read(self.spark)
-        tomb = self._has_tombstones()
-        if not self.use_bloom and not tomb:
-            new = cand.join(seen, "url", "left_anti")
-            self.seen.append(new, lineage={"superstep": superstep})
+        if not self._has_tombstones():
+            self.seen.append(new_urls_exact(urls, seen), lineage={"superstep": superstep})
             return
-        from ..operators.seen import bloom_build, bloom_merge, cuckoo_build, new_urls_exact
-
-        bloom = self.bloom.read(self.spark) if self.use_bloom else None
-        deleted = self.deleted.read(self.spark) if tomb else None
-        cuckoo = self.cuckoo.read(self.spark) if tomb else None
-        params = self.bloom_params if self.use_bloom else {}
-        new = new_urls_exact(
-            cand,
-            seen,
-            bloom=bloom,
-            deleted=deleted,
-            cuckoo=cuckoo,
-            cuckoo_shards=self.cuckoo_shards,
-            **params,
-        ).persist()
-        if tomb:
-            resurrected = new.join(deleted, "url", "leftsemi").persist()
-            brand_new = new.join(deleted, "url", "left_anti").persist()
-            if not resurrected.isEmpty():
-                remaining = deleted.join(resurrected, "url", "left_anti").persist()
-                self.deleted.overwrite(
-                    remaining, lineage={"superstep": superstep, "stage": "resurrect"}
-                )
-                self.cuckoo.overwrite(
-                    cuckoo_build(remaining, n_buckets=self.cuckoo_shards),
-                    lineage={"superstep": superstep, "stage": "resurrect"},
-                )
-                remaining.unpersist()
-            resurrected.unpersist()
-        else:
-            brand_new = new
+        deleted = self.deleted.read(self.spark)
+        new = new_urls_exact(urls, seen, deleted).persist()
+        resurrected = new.join(deleted, "url", "leftsemi").persist()
+        brand_new = new.join(deleted, "url", "left_anti")
+        if not resurrected.isEmpty():
+            self.deleted.overwrite(
+                deleted.join(resurrected, "url", "left_anti"),
+                lineage={"superstep": superstep, "stage": "resurrect"},
+            )
+        resurrected.unpersist()
         self.seen.append(brand_new, lineage={"superstep": superstep})
-        if self.use_bloom:
-            delta = bloom_build(
-                brand_new,
-                n_buckets=self.bloom_params["n_buckets"],
-                n_bits=self.bloom_params["n_bits"],
-                k=self.bloom_params["k"],
-            )
-            self.bloom.overwrite(
-                bloom_merge(bloom, delta, n_bits=self.bloom_params["n_bits"]),
-                lineage={"superstep": superstep, "stage": "bloom_merge"},
-            )
-        if tomb:
-            brand_new.unpersist()
         new.unpersist()
 
     # ------------------------------------------------------ recrawl/expiry
 
     def forget(self, urls: DataFrame) -> None:
         """Tombstone previously-seen URLs so a later crawl re-admits and
-        re-fetches them (recrawl/expiry — the deletion semantics the
-        Bloom filter cannot express, north_star's cuckoo sidecar).
+        re-fetches them (recrawl/expiry).
 
         MERGE-shape at 10^10 scale: the big append-only ``seen`` table
-        is NEVER rewritten; only the small tombstone set is (overwrite
-        of deleted + rebuild of its per-shard cuckoo filters, both
-        O(|tombstones|))."""
-        from ..operators.seen import cuckoo_build
-
+        is NEVER rewritten; only the small tombstone set is (an
+        O(|tombstones|) overwrite of ``deleted``)."""
         tombs = (
             urls.select("url")
             .distinct()
@@ -350,13 +279,7 @@ class CrawlEngine:
         )
         if self._has_tombstones():
             tombs = self.deleted.read(self.spark).unionByName(tombs).distinct()
-        tombs = tombs.persist()
         self.deleted.overwrite(tombs, lineage={"stage": "forget"})
-        self.cuckoo.overwrite(
-            cuckoo_build(tombs, n_buckets=self.cuckoo_shards),
-            lineage={"stage": "forget"},
-        )
-        tombs.unpersist()
 
     # --------------------------------------------------------- supersteps
 
@@ -698,21 +621,19 @@ class CrawlEngine:
             "frontier": self.frontier,
             "seen_pairs": self.seen_pairs,
             "payload_report": self.payload_report,
-            "bloom": self.bloom,
             "deleted": self.deleted,
-            "cuckoo": self.cuckoo,
             "metrics": self.metrics,
         }
 
     # tables whose state is GLOBAL across crawl rounds (the url-seen
     # world-state); everything else is per-round output
-    KEEP_ACROSS_ROUNDS = ("seen", "bloom", "deleted", "cuckoo")
+    KEEP_ACROSS_ROUNDS = ("seen", "deleted")
 
     def new_round(self) -> None:
         """Begin a fresh crawl round over the same warehouse: truncate
         the per-round tables (crawl_order, frontier, entities, reports,
-        metrics) but keep the global URL-seen state — seen/bloom plus
-        the tombstone sidecar — so the next ``run(resume=True)``
+        metrics) but keep the global URL-seen state — seen plus its
+        tombstones — so the next ``run(resume=True)``
         re-fetches everything yet appends to ``seen`` ONLY urls that
         are brand-new or were forget()-tombstoned (recrawl/expiry
         semantics). Round transitions are snapshot commits like any

@@ -13,7 +13,7 @@ re-expressed as Structured Streaming stateful operators:
     at 10^10 URLs. State per bucket = packed int64 xxhash64 set; a
     64-bit hash collision (birthday-bound ~3 expected at 10^10) can
     only *drop* a URL, never duplicate one — the batch engine's
-    confirming anti-join (operators/seen.py) remains the exact path,
+    anti-join (operators/seen.py) remains the exact path,
     this is the streaming fast path.
 
   * stream_host_budget_gate — per-host crawl budget with the
@@ -87,20 +87,17 @@ def stream_url_seen_dedup(
     excluded): the batch→stream bridge. Implemented as a stream-static
     left_anti join IN FRONT of the stateful dedup — a batch-seen url is
     suppressed in every micro-batch without ever entering stream state,
-    which is exactly initial-state semantics (the Spark-4-native
-    initial-state form lives in streaming/tws.py, gated on protobuf).
+    which is exactly initial-state semantics.
 
     Keyed by `pmod(xxhash64(url), n_buckets)` so the state store holds
-    n_buckets partitions of ~|seen|/n_buckets hashes each — the same
-    bucketing the batch Bloom filter uses (operators/seen.py). The
+    n_buckets partitions of ~|seen|/n_buckets hashes each. The
     state array is kept SORTED, so the probe is searchsorted, not a
     linear scan. Scale honesty: applyInPandasWithState holds ONE value
     per key, so each update rewrites the bucket's whole blob — fine
     for streams whose per-bucket seen set fits state-store practice
-    (raise n_buckets to shrink blobs); the append-only ListState
-    variant that avoids whole-blob rewrites is the Spark-4
-    transformWithState path in streaming/tws.py (protobuf-gated in
-    this sandbox). The batch engine remains the 10^10 path.
+    (raise n_buckets to shrink blobs); an append-only ListState
+    variant would need Spark 4's transformWithStateInPandas, which
+    requires protobuf. The batch engine remains the 10^10 path.
     """
     if initial_seen is not None:
         discovered = discovered.join(

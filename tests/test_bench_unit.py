@@ -195,3 +195,21 @@ def test_cleanest_pair_prefers_probe_quiet_pairs():
     eff3, _, qual3 = cleanest_pair_efficiency(per_level_insane)
     assert abs(eff3 - 360.0 / (4 * 80.0)) < 1e-9
     assert not qual3
+
+
+def test_bench_regime_raises_with_failed_leg_stderr(monkeypatch):
+    """A crashed leg subprocess must surface its own stderr, not an
+    IndexError from parsing its empty stdout."""
+    import subprocess
+
+    import pytest
+
+    from tools import bench_regime
+
+    def crashed(cmd, **kw):
+        return subprocess.CompletedProcess(cmd, 1, stdout="", stderr="Traceback: boom")
+
+    monkeypatch.setattr(subprocess, "run", crashed)
+    monkeypatch.setattr(sys, "argv", ["bench_regime.py", "--cpus", "1"])
+    with pytest.raises(RuntimeError, match="exited 1:\nTraceback: boom"):
+        bench_regime.main()

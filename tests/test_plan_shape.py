@@ -10,6 +10,7 @@ is caught by tests instead of a benchmark run:
     column-pruned to the requested columns (no body bytes read)
   * the salted frontier layout supports partition-pruned per-bucket
     reads (PartitionFilters on host_bucket)
+  * the seen-set update scans `seen` once, with no Python in the plan
 """
 
 import pytest
@@ -119,6 +120,30 @@ def test_payload_join_broadcasts_key_side(corpus):
     # no shuffle exchange anywhere: keys go over a broadcast exchange,
     # the payload scan feeds the join directly
     assert "Exchange hashpartitioning" not in plan
+
+
+@pytest.mark.parametrize("tombstones", [False, True])
+def test_seen_path_scans_seen_once_jvm_side(spark, tmp_path, tombstones):
+    """new_urls_exact, the engine's one seen-set path, reads `seen`
+    exactly once and runs no Python: a prefilter whose confirming join
+    re-reads `seen`, or a pandas cogroup probe, shows up here."""
+    from scrapeulous_spark.operators.seen import new_urls_exact
+
+    def table(name, ids):
+        path = str(tmp_path / name)
+        spark.createDataFrame(
+            [(f"http://h.example.com/p{i}",) for i in ids], ["url"]
+        ).write.parquet(path)
+        return spark.read.parquet(path)
+
+    seen = table("seen", range(200))
+    cand = table("cand", range(100, 300))
+    deleted = table("deleted", range(0, 200, 7)) if tombstones else None
+    plan = _plan(new_urls_exact(cand, seen, deleted))
+    seen_scans = [ln for ln in plan.splitlines() if "Location:" in ln and ln.endswith("/seen]")]
+    assert len(seen_scans) == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "ArrowEvalPython" not in plan
 
 
 def test_extraction_plan_jvm_side_with_guards(spark):

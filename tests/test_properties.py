@@ -3,7 +3,7 @@
 No Spark session needed — these cover the deterministic building
 blocks whose exactness the engine's north-rule guarantees rest on:
 the PNG/qpng codec (payload invariants), URL normalization twins
-(seen-set exactness), the cuckoo deletion sidecar, and phash.
+(seen-set exactness), and phash.
 """
 
 from __future__ import annotations
@@ -22,7 +22,6 @@ from scrapeulous_spark.codec.png import (
     quantize,
 )
 from scrapeulous_spark.functions import urls as U
-from scrapeulous_spark.operators.cuckoo import CuckooFilter
 
 # ------------------------------------------------------------------ strategies
 
@@ -138,42 +137,6 @@ def test_resolve_root_relative_keeps_seed_host(path, seed):
     r = U.resolve("/" + path, origin)
     assert r is not None
     assert U.host_of(r) == U.host_of(seed)
-
-
-# --------------------------------------------------------------------- cuckoo
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.lists(abs_urls(), min_size=0, max_size=80, unique=True))
-def test_cuckoo_no_false_negatives(urls):
-    f = CuckooFilter(n_buckets=1 << 8)
-    inserted = [u for u in urls if f.insert(u)]
-    for u in inserted:
-        assert f.contains(u)  # cuckoo filters never false-negative
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.lists(abs_urls(), min_size=0, max_size=60, unique=True))
-def test_cuckoo_slot_count_invariant(urls):
-    f = CuckooFilter(n_buckets=1 << 8)
-    ins = sum(1 for u in urls if f.insert(u))
-    assert int((f.table != 0).sum()) == ins
-    dels = sum(1 for u in urls if f.delete(u))
-    # each successful delete clears exactly one occupied slot
-    assert int((f.table != 0).sum()) == ins - dels
-    assert dels >= min(ins, len(urls)) - (len(urls) - ins)  # every inserted url deletable
-
-
-@settings(max_examples=20, deadline=None)
-@given(st.lists(abs_urls(), min_size=0, max_size=40, unique=True))
-def test_cuckoo_serialization_roundtrip(urls):
-    f = CuckooFilter(n_buckets=1 << 8)
-    for u in urls:
-        f.insert(u)
-    g = CuckooFilter.from_bytes(f.to_bytes(), f.n_buckets)
-    assert np.array_equal(f.table, g.table)
-    for u in urls:
-        assert g.contains(u) == f.contains(u)
 
 
 # ---------------------------------------------------- entity guard literals

@@ -1,12 +1,9 @@
-"""Recrawl/expiry (cuckoo tombstone sidecar) tests.
+"""Recrawl/expiry (tombstone) tests.
 
-North-rule component: "URL-seen dedup uses a partitioned Bloom filter
-with a cuckoo-filter sidecar for deletions". Properties:
+Properties:
 
   * new_urls_exact with tombstones == plain set algebra
-    cand \\ (seen \\ deleted), with and without the pruning filters
-  * cuckoo prefilter never false-negatives (a miss proves
-    not-tombstoned)
+    cand \\ (seen \\ deleted)
   * engine: forget() shrinks the effective seen set; a later
     _update_seen re-admits the forgotten url by DROPPING its tombstone
     (no duplicate rows in the big append-only seen table)
@@ -14,14 +11,7 @@ with a cuckoo-filter sidecar for deletions". Properties:
 
 import pytest
 
-from pyspark.sql import functions as F
-
-from scrapeulous_spark.operators.seen import (
-    bloom_build,
-    cuckoo_build,
-    cuckoo_prefilter,
-    new_urls_exact,
-)
+from scrapeulous_spark.operators.seen import new_urls_exact
 
 
 @pytest.fixture(scope="module")
@@ -53,47 +43,12 @@ def test_tombstone_membership_exact_no_filters(spark, frames):
     assert got == _expected(seen, deleted, cand)
 
 
-def test_tombstone_membership_exact_with_filters(spark, frames):
-    seen, deleted, cand = frames
-    params = dict(n_buckets=16, n_bits=1 << 16, k=4)
-    bloom = bloom_build(seen, **params).persist()
-    cuckoo = cuckoo_build(deleted, n_buckets=16).persist()
-    got = sorted(
-        r.url
-        for r in new_urls_exact(
-            cand, seen, bloom=bloom, deleted=deleted, cuckoo=cuckoo, cuckoo_shards=16, **params
-        ).collect()
-    )
-    assert got == _expected(seen, deleted, cand)
-    bloom.unpersist()
-    cuckoo.unpersist()
-
-
-def test_cuckoo_prefilter_no_false_negatives(spark, frames):
-    _, deleted, _ = frames
-    cuckoo = cuckoo_build(deleted, n_buckets=16)
-    stamped = cuckoo_prefilter(deleted.select("url"), cuckoo, n_buckets=16)
-    assert stamped.filter("not maybe_deleted").count() == 0
-
-
-def test_cuckoo_build_deterministic(spark, frames):
-    _, deleted, _ = frames
-    a = {r.bucket: bytes(r.filter) for r in cuckoo_build(deleted, n_buckets=8).collect()}
-    b = {
-        r.bucket: bytes(r.filter)
-        for r in cuckoo_build(deleted.repartition(7), n_buckets=8).collect()
-    }
-    assert a == b  # partitioning-invariant (sorted per-shard inserts)
-
-
 def test_engine_forget_and_resurrect(spark, tmp_path):
     from scrapeulous_spark.plans.loop import CrawlEngine
     from scrapeulous_spark.sources.corpus import SMOKE, ensure_corpus
 
     paths = ensure_corpus(SMOKE)
-    eng = CrawlEngine(
-        spark, str(tmp_path / "wh"), paths, validate_images=False, cuckoo_shards=8
-    )
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), paths, validate_images=False)
     eng.run()
     seen0 = sorted(r.url for r in eng.result_seen().collect())
     physical0 = eng.seen.read(spark).count()
@@ -124,35 +79,6 @@ def test_engine_forget_and_resurrect(spark, tmp_path):
     assert eng.deleted.read(spark).count() == len(victims) - len(readmit)
 
 
-def test_engine_forget_with_bloom_identical(spark, tmp_path):
-    """The bloom's staleness after forget() (blooms cannot delete) must
-    not change any result: bloom+cuckoo path == plain path."""
-    from scrapeulous_spark.plans.loop import CrawlEngine
-    from scrapeulous_spark.sources.corpus import SMOKE, ensure_corpus
-
-    paths = ensure_corpus(SMOKE)
-    outs = {}
-    for label, use_bloom in (("plain", False), ("bloom", True)):
-        eng = CrawlEngine(
-            spark,
-            str(tmp_path / label),
-            paths,
-            validate_images=False,
-            use_bloom=use_bloom,
-            bloom_buckets=8,
-            bloom_bits=1 << 16,
-            cuckoo_shards=8,
-        )
-        eng.run()
-        seen0 = sorted(r.url for r in eng.result_seen().collect())
-        eng.forget(spark.createDataFrame([(u,) for u in seen0[:7]], ["url"]))
-        eng._update_seen(
-            spark.createDataFrame([(u,) for u in seen0[:3]], ["url"]), superstep=99
-        )
-        outs[label] = sorted(r.url for r in eng.result_seen().collect())
-    assert outs["plain"] == outs["bloom"]
-
-
 def test_engine_recrawl_rounds(spark, tmp_path):
     """Full recrawl round: forget() victims, new_round(), run again.
     Every victim is re-discovered (tombstones drained), the effective
@@ -162,9 +88,7 @@ def test_engine_recrawl_rounds(spark, tmp_path):
     from scrapeulous_spark.sources.corpus import SMOKE, ensure_corpus
 
     paths = ensure_corpus(SMOKE)
-    eng = CrawlEngine(
-        spark, str(tmp_path / "wh"), paths, validate_images=False, cuckoo_shards=8
-    )
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), paths, validate_images=False)
     eng.run()
     seen1 = sorted(r.url for r in eng.result_seen().collect())
     order1 = sorted(map(tuple, eng.result_crawl_order().collect()))
@@ -182,39 +106,6 @@ def test_engine_recrawl_rounds(spark, tmp_path):
     assert eng.deleted.read(spark).count() == 0  # all tombstones drained
 
 
-def test_cuckoo_prefilter_matches_python_probe(spark, frames):
-    """The vectorized JVM-hash + numpy-gather probe must agree with
-    CuckooFilter.contains on every candidate (hits AND misses)."""
-    from scrapeulous_spark.operators.cuckoo import CuckooFilter
-    from scrapeulous_spark.operators.seen import CUCKOO_FILTER_BUCKETS
-
-    seen, deleted, cand = frames
-    cuckoo = cuckoo_build(deleted, n_buckets=16)
-    stamped = {
-        r.url: r.maybe_deleted
-        for r in cuckoo_prefilter(cand.select("url").distinct(), cuckoo, n_buckets=16).collect()
-    }
-    # rebuild the per-shard filters driver-side and probe in pure python
-    shard_bytes = {r.bucket: bytes(r.filter) for r in cuckoo.collect()}
-    from pyspark.sql import functions as F
-
-    shard_of = {
-        r.url: r.b
-        for r in cand.select("url")
-        .distinct()
-        .withColumn("b", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
-        .collect()
-    }
-    for url, got in stamped.items():
-        b = shard_of[url]
-        if b not in shard_bytes:
-            expected = False
-        else:
-            f = CuckooFilter.from_bytes(shard_bytes[b], CUCKOO_FILTER_BUCKETS)
-            expected = f.contains(url)
-        assert got == expected, url
-
-
 def test_engine_vacuum_preserves_current_state(spark, tmp_path):
     """vacuum() expires superseded data dirs; current reads, resume
     state, and a follow-on round all keep working."""
@@ -222,9 +113,7 @@ def test_engine_vacuum_preserves_current_state(spark, tmp_path):
     from scrapeulous_spark.sources.corpus import SMOKE, ensure_corpus
 
     paths = ensure_corpus(SMOKE)
-    eng = CrawlEngine(
-        spark, str(tmp_path / "wh"), paths, validate_images=False, cuckoo_shards=8
-    )
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), paths, validate_images=False)
     eng.run()
     seen = sorted(r.url for r in eng.result_seen().collect())
     order = sorted(map(tuple, eng.result_crawl_order().collect()))
@@ -237,39 +126,6 @@ def test_engine_vacuum_preserves_current_state(spark, tmp_path):
     eng.new_round()
     eng.run(resume=True)
     assert sorted(r.url for r in eng.result_seen().collect()) == seen
-
-
-def test_resized_cuckoo_filter_probes_exactly(spark, frames):
-    """A filter built with a NON-default bucket count (the overflow
-    remedy) must probe correctly with no parameter plumbed through —
-    the probe derives the size from the blob. A build/probe size
-    mismatch previously produced false not-tombstoned proofs that
-    silently suppressed recrawls."""
-    seen, deleted, cand = frames
-    big = cuckoo_build(deleted, n_buckets=16, filter_buckets=1 << 12).persist()
-    got = sorted(
-        r.url
-        for r in new_urls_exact(
-            cand, seen, deleted=deleted, cuckoo=big, cuckoo_shards=16
-        ).collect()
-    )
-    assert got == _expected(seen, deleted, cand)
-    # every tombstoned candidate must still register as maybe_deleted
-    stamped = cuckoo_prefilter(
-        deleted.select("url").distinct(), big, n_buckets=16
-    ).collect()
-    assert all(r.maybe_deleted for r in stamped)
-    big.unpersist()
-
-
-def test_cuckoo_rejects_non_power_of_two():
-    """The partial-key alt index is an involution only for power-of-two
-    bucket counts; any other size must fail loudly at construction —
-    not produce false negatives after evictions."""
-    from scrapeulous_spark.operators.cuckoo import CuckooFilter
-
-    with pytest.raises(ValueError, match="power of two"):
-        CuckooFilter(n_buckets=1000)
 
 
 def test_null_host_does_not_break_hot_detection(spark):

@@ -54,14 +54,14 @@ def leg(cpus: int, params, runs: int) -> dict:
 
     with tempfile.TemporaryDirectory() as wh:
         CrawlEngine(spark, wh, warm).run()  # warmup: compile the plans
-    walls, utils, fetched = [], [], 0
+    walls, utils, fetched = [], [], []
     for _ in range(runs):
         with tempfile.TemporaryDirectory() as wh:
             c0 = cgroup_cpu_s()
             t0 = time.monotonic()
             eng = CrawlEngine(spark, wh, paths)
             eng.run()
-            fetched = eng.result_crawl_order().count()  # inside the window, like bench.py
+            fetched.append(eng.result_crawl_order().count())  # inside the window, like bench.py
             w = time.monotonic() - t0
             c1 = cgroup_cpu_s()
         walls.append(round(w, 2))
@@ -69,14 +69,18 @@ def leg(cpus: int, params, runs: int) -> dict:
             None if c0 is None or c1 is None else round((c1 - c0) / (cpus * w), 3)
         )
     spark.stop()
+    # identical inputs must crawl identically; a run that fetched a
+    # different count would make urls_per_sec compare unlike work
+    if len(set(fetched)) != 1:
+        raise RuntimeError(f"local[{cpus}]: fetched counts differ across runs: {fetched}")
     wall = min(walls)
     return {
         "cpus": cpus,
         "walls": walls,
         "pinned_util_all_runs": utils,
         "wall_sec": wall,
-        "urls_fetched": fetched,
-        "urls_per_sec": round(fetched / wall, 2),
+        "urls_fetched": fetched[0],
+        "urls_per_sec": round(fetched[0] / wall, 2),
     }
 
 
@@ -124,6 +128,10 @@ def main():
             "--leg", str(n), "--scale", str(scale), "--runs", str(runs),
         ]
         res = subprocess.run(cmd, capture_output=True, text=True)
+        if res.returncode != 0 or not res.stdout.strip():
+            raise RuntimeError(
+                f"local[{n}] leg exited {res.returncode}:\n{res.stderr[-4000:]}"
+            )
         out["legs"][str(n)] = json.loads(res.stdout.strip().splitlines()[-1])
         print(json.dumps(out["legs"][str(n)]), flush=True)
     ks = sorted(int(k) for k in out["legs"])

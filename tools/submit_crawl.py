@@ -8,7 +8,7 @@ relaunch. Prints ONE JSON line with wall time and URLs/sec.
 
 Usage:
     spark-submit --master local[8] --py-files dist/scrapeulous_spark.zip \
-        tools/submit_crawl.py [--scale smoke|bench] [--use-bloom]
+        tools/submit_crawl.py [--scale smoke|bench] [--link-depth N]
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ import time
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scale", choices=["smoke", "bench"], default="smoke")
-    ap.add_argument("--use-bloom", action="store_true")
     ap.add_argument("--link-depth", type=int, default=1)
     args = ap.parse_args()
 
@@ -45,9 +44,7 @@ def main() -> None:
 
     with tempfile.TemporaryDirectory() as wh:
         t0 = time.time()
-        eng = CrawlEngine(
-            spark, wh, paths, link_depth=args.link_depth, use_bloom=args.use_bloom
-        )
+        eng = CrawlEngine(spark, wh, paths, link_depth=args.link_depth)
         eng.run()
         n_urls = eng.result_crawl_order().count()
         n_seen = eng.result_seen().count()
@@ -58,7 +55,6 @@ def main() -> None:
             {
                 "master": spark.sparkContext.master,
                 "scale": args.scale,
-                "use_bloom": args.use_bloom,
                 "urls_fetched": n_urls,
                 "seen_set": n_seen,
                 "wall_sec": round(wall, 2),
